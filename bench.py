@@ -44,7 +44,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "200000"))
 # 3.2M rows since round 4: the selector flip (plain+brotli-9 for long
 # strings) made the encode kernels ~3x faster, so the r3 sizing (1.6M)
@@ -124,14 +124,6 @@ def bench_encode(spark, corpus_path: str, out: str, target_rows: int = 2500,
     job = encode(spark, df, out, target_rows=target_rows, **enc_kwargs)
     dt = time.time() - t0
     return dt, job
-
-
-def bench_encode_raw(spark, corpus_path: str, out: str,
-                     target_rows: int = 2500, **enc_kwargs):
-    """General path with shuffle_payload="raw" (legacy raw-row
-    exchange; the default is packed zstd-1 Arrow-IPC blobs)."""
-    return bench_encode(spark, corpus_path, out, target_rows,
-                        shuffle_payload="raw", **enc_kwargs)
 
 
 def dir_bytes(pattern: str) -> int:
@@ -390,11 +382,11 @@ def run_scaling(spark32, pairs: int = 7) -> dict:
       directly by each executor's Python worker.  No shuffle; content
       bytes never transit the JVM.
     * ``shuffle`` (the general path for arbitrary row layouts): one
-      explicit repartition by salted work unit.  Since round 4 the
-      exchange payload defaults to PACKED zstd-1 Arrow-IPC sub-batch
-      blobs, so the row-serialize/sort/reduce-IPC path carries
-      compressed bytes (~8.7x less uncompressed volume than raw rows
-      on source text — BENCH/SHUFFLE_BYTES.json).
+      explicit repartition by salted work unit.  The exchange carries
+      packed zstd-1 Arrow-IPC sub-batch blobs, so the row-serialize/
+      sort/reduce-IPC path moves compressed bytes (~8.7x less
+      uncompressed volume than raw rows on source text —
+      BENCH/SHUFFLE_BYTES.json).
 
     Pairs are interleaved ACROSS modes (clustered p0, shuffle p0,
     clustered p1, ...) so one multi-minute host-throttle window cannot
@@ -780,16 +772,13 @@ def _write_baseline_md(s: dict) -> None:
             f"({sh['thr_n_gbps']} → {sh['thr_4n_gbps']} GB/s), compute "
             f"eff {sh.get('compute_efficiency')}, best pair "
             f"{sh.get('best_efficiency')}, {sh.get('n_pairs_ge_08')}/"
-            f"{len(sh['all_pairs'])} pairs ≥ 0.8.  Since round 4 this "
-            "path ships PACKED zstd-1 Arrow-IPC sub-batch blobs through "
-            "the exchange (shuffle_payload default): the row-serialize/"
-            "sort/reduce-IPC path — the memory-bandwidth-bound "
-            "segment that rode this host's memcpy ceiling at ~0.75 wall "
-            "eff in round 3 — now carries ~8.7x less uncompressed "
-            "volume for source text (measured both budgets: "
-            "BENCH/SHUFFLE_BYTES.json via scripts/shuffle_bytes_probe"
-            ".py; on-wire shuffle bytes stay ~equal since Spark lz4s "
-            "shuffle blocks either way, wall 2.3x faster at 8 cores).  "
+            f"{len(sh['all_pairs'])} pairs ≥ 0.8.  This path ships "
+            "packed zstd-1 Arrow-IPC sub-batch blobs through the "
+            "exchange: the row-serialize/sort/reduce-IPC path — the "
+            "memory-bandwidth-bound segment — carries ~8.7x less "
+            "uncompressed volume for source text than raw rows "
+            "(BENCH/SHUFFLE_BYTES.json; on-wire shuffle bytes stay "
+            "~equal since Spark lz4s shuffle blocks either way).  "
             "What remains at N=2 vs 4N=8 on this one-socket host is "
             "zstd/brotli kernel + IPC memory traffic sharing one "
             "memory bus; on a real N→4N cluster each node brings its "

@@ -1,13 +1,7 @@
-"""Tests for the two round-3 encode paths:
-
-* ``arrow_stream`` (default) — mapInArrow streaming kernel with an
-  in-worker prefetch thread; must be byte-identical to the legacy
-  ``applyInArrow`` grouped path (same partition plan, same in-shuffle
-  sort ⇒ same block bytes and content digests).
-* ``encode_clustered`` — the shuffle-free Iceberg-partition path: work
-  units are physical parquet rowgroup ranges read directly by the
-  executor's Python worker (mirrors the reference's file-in →
-  encoded-file-out unit, /root/reference/src/lib.rs:34-118).
+"""Tests for ``encode_clustered`` — the shuffle-free Iceberg-partition
+path: work units are physical parquet rowgroup ranges read directly by
+the executor's Python worker (mirrors the reference's file-in →
+encoded-file-out unit, /root/reference/src/lib.rs:34-118).
 """
 
 from __future__ import annotations
@@ -20,8 +14,8 @@ import pyarrow.parquet as pq
 
 from vcf2parquet_spark import table as tbl
 from vcf2parquet_spark.corpus import synth_corpus
-from vcf2parquet_spark.encode import (EncodeOptions, encode,
-                                      encode_clustered, plan_file_units)
+from vcf2parquet_spark.encode import (EncodeOptions, encode_clustered,
+                                      plan_file_units)
 from vcf2parquet_spark.decode import decode, verify
 
 N_ROWS = 5_000
@@ -38,24 +32,6 @@ def _block_digests(out: str) -> dict[str, str]:
             h.update(d)
         per_part[os.path.basename(f)] = h.hexdigest()
     return per_part
-
-
-def test_stream_matches_grouped_path_bytes(spark, tmp_path):
-    df = synth_corpus(spark, N_ROWS, seed=7, partitions=3)
-    df.cache().count()
-    outs = {}
-    for name, stream in (("stream", True), ("grouped", False)):
-        out = str(tmp_path / name)
-        # shuffle_payload="raw": this test pins the raw-row stream vs
-        # grouped (applyInArrow) equivalence; the packed default would
-        # force both legs through the stream kernel
-        job = encode(spark, df, out,
-                     EncodeOptions(target_rows=1_500, arrow_stream=stream,
-                                   shuffle_payload="raw"))
-        assert job["n_rows"] == N_ROWS
-        outs[name] = _block_digests(out)
-    assert outs["stream"] == outs["grouped"]
-    df.unpersist()
 
 
 def _write_clustered_input(spark, df, path: str, row_group_size: int = 600):

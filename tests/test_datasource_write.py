@@ -157,6 +157,24 @@ def test_schema_changing_overwrite_and_time_travel(reg, tmp_path):
     assert "commit" in old.columns and old.count() == 300
 
 
+def test_empty_overwrite_schema_is_newest(reg, tmp_path):
+    """write(A) → overwrite(B) → overwrite(empty B): the live set is
+    empty, so schema() falls back to a committed manifest — the newest
+    one (B's schema), not the oldest (A's)."""
+    spark = reg
+    out = str(tmp_path / "eo_blocks")
+    synth_corpus(spark, 100, seed=21, partitions=1) \
+        .write.format("vcfblocks").mode("append").save(out)
+    d2 = (synth_corpus(spark, 100, seed=22, partitions=1)
+          .withColumnRenamed("commit", "rev"))
+    d2.write.format("vcfblocks").mode("overwrite").save(out)
+    d2.limit(0).write.format("vcfblocks").mode("overwrite").save(out)
+    assert tbl.live_parts(out) == {}
+
+    now = spark.read.format("vcfblocks").load(out)
+    assert "rev" in now.columns and "commit" not in now.columns
+
+
 def test_append_schema_mismatch_raises(reg, tmp_path):
     spark = reg
     out = str(tmp_path / "mm_blocks")

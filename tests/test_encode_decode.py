@@ -122,17 +122,7 @@ def test_determinism_across_parallelism(spark, corpus, tmp_path):
         out = str(tmp_path / f"d{n_input_parts}")
         df = corpus.repartition(n_input_parts)
         encode(spark, df, out, batch_size=2_000, target_rows=2_000)
-        per_part = {}
-        for f in sorted(glob.glob(f"{out}/data/*.parquet")):
-            t = pq.read_table(f)
-            import hashlib
-            h = hashlib.sha256()
-            for col in ("column", "codec", "meta"):
-                h.update("".join(t.column(col).to_pylist()).encode())
-            for d in t.column("data").to_pylist():
-                h.update(d)
-            per_part[os.path.basename(f)] = h.hexdigest()
-        digests.append(per_part)
+        digests.append(_blocks_digests(out))
     assert digests[0] == digests[1]
 
 
@@ -150,31 +140,33 @@ def _blocks_digests(out: str) -> dict:
     return per_part
 
 
-def test_packed_shuffle_byte_identical_and_verified(spark, corpus,
-                                                    tmp_path):
-    """shuffle_payload="packed" (zstd-compressed Arrow-IPC sub-batch
-    blobs through the exchange) must produce byte-identical blocks to
-    the raw-row shuffle — the payload representation is an exchange
-    concern, never a format one — and round-trip sha256-clean.  Also
-    exercises NULLs in every column through the IPC pack/unpack."""
-    out_raw = str(tmp_path / "praw")
-    out_pk = str(tmp_path / "ppk")
-    encode(spark, corpus, out_raw, batch_size=2_000, target_rows=2_000,
-           shuffle_payload="raw")
-    encode(spark, corpus, out_pk, batch_size=2_000, target_rows=2_000,
-           shuffle_payload="packed")
-    assert _blocks_digests(out_raw) == _blocks_digests(out_pk)
-    assert verify(spark, corpus, out_pk)["ok"]
-    # nulls everywhere survive the packed path
-    rows = [("org/r", "a.py", "c" * 40, None, "x = 1"),
-            (None, None, None, None, None),
+def test_exchange_layout_independent_bytes(spark, corpus, tmp_path):
+    """The bytes of every block and every content digest must not depend
+    on how the exchange delivered a unit's rows: the same corpus encoded
+    from two input partitionings gives identical blocks and identical
+    non-empty ``content_sha256``.  The corpus carries a row NULL in
+    every column and NULL sort keys (content ties broken by NULL vs
+    value), which the unit sort must place the same way each time."""
+    rows = [(None, None, None, None, None),
+            ("org/r", "a.py", "c" * 40, None, "x = 1"),
             ("org/r", "b.py", "d" * 40, "py", None)]
+    rows += [("org/n", None if j % 11 == 0 else f"f{j % 20}.py",
+              f"{j % 3:040x}", "py",
+              None if j % 7 == 0 else f"v{j} = {j}") for j in range(200)]
     ddl = ("repo string, path string, commit string, lang string, "
            "content string")
-    nf = spark.createDataFrame(rows, ddl)
-    out_n = str(tmp_path / "pnull")
-    encode(spark, nf, out_n, target_rows=10, shuffle_payload="packed")
-    assert verify(spark, nf, out_n)["ok"]
+    df = corpus.unionByName(spark.createDataFrame(rows, ddl))
+    digests, shas = [], []
+    for name, d in (("a", df), ("b", df.repartition(7))):
+        out = str(tmp_path / name)
+        encode(spark, d, out, batch_size=2_000, target_rows=2_000)
+        digests.append(_blocks_digests(out))
+        shas.append({p: m["content_sha256"]
+                     for p, m in tbl.committed_parts(out).items()})
+    assert digests[0] == digests[1]
+    assert shas[0] == shas[1]
+    assert all(shas[0].values())
+    assert verify(spark, df, out)["ok"]
 
 
 def test_partition_plan_salting():
@@ -445,27 +437,6 @@ def test_compaction_crash_safety(spark, tmp_path):
     for s in tbl.snapshots(out):
         n = decode(spark, out, snapshot_id=s["snapshot_id"]).count()
         assert n == 100 * min(s["snapshot_id"] + 1, 3), s
-
-
-def test_presort_digest_stable_with_nulls(spark, tmp_path):
-    """Null sort-column values: the shuffle presort (asc_nulls_last) and
-    the in-UDF pyarrow sort (nulls at end) must place them identically,
-    so manifests carry the same content digest either way."""
-    rows = [("org/r", f"f{j}.py", f"{j:040x}", "py",
-             None if j % 7 == 0 else f"v{j} = {j}") for j in range(200)]
-    ddl = ("repo string, path string, commit string, lang string, "
-           "content string")
-    df = spark.createDataFrame(rows, ddl)
-    digests = {}
-    for presort in (True, False):
-        out = str(tmp_path / f"blocks_{presort}")
-        encode(spark, df, out,
-               EncodeOptions(target_rows=1_000, presort_in_shuffle=presort,
-                             sort_columns=("repo", "path", "content")))
-        digests[presort] = {p: m["content_sha256"]
-                            for p, m in tbl.committed_parts(out).items()}
-    assert digests[True] == digests[False]
-    assert all(d for d in digests[True].values())
 
 
 def test_encode_decode_mixed_types(spark, tmp_path):

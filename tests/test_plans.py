@@ -110,40 +110,6 @@ def test_exact_dedup_single_shuffle(spark):
     assert "Join" not in s
 
 
-def test_encode_shuffle_has_single_combined_sort(spark, corpus_path):
-    """The deterministic (repo,path,commit,content) sort must ride the
-    shuffle's mandatory part_id sort — exactly one Sort node, one data
-    exchange, no second sort above or below applyInArrow."""
-    from vcf2parquet_spark.encode import plan_partitions
-    import pyarrow as pa
-
-    df = spark.read.parquet(corpus_path)
-    counts = [(r["repo"], r["cnt"]) for r in
-              df.groupBy("repo").agg(F.count("*").alias("cnt")).collect()]
-    plan, _ = plan_partitions(counts, 500)
-    plan_df = spark.createDataFrame(
-        [(p["repo"], p["base_part_id"], p["fanout"]) for p in plan],
-        "repo string, base_part_id int, fanout int")
-    wp = (df.join(F.broadcast(plan_df), "repo")
-          .withColumn("part_id",
-                      (F.col("base_part_id")
-                       + F.when(F.col("fanout") > 1,
-                                F.pmod(F.xxhash64("path", "commit"),
-                                       F.col("fanout")))
-                       .otherwise(F.lit(0))).cast("int"))
-          .drop("base_part_id", "fanout"))
-
-    def g(key, t):
-        return t
-
-    q = (wp.repartition("part_id")
-         .sortWithinPartitions("part_id", "repo", "path", "commit", "content")
-         .groupBy("part_id").applyInArrow(g, schema=wp.schema))
-    s = _plan(q, "simple")
-    assert s.count("+- Sort") == 1, s
-    assert s.count("Exchange hashpartitioning") == 1, s
-
-
 def test_multimodal_ops_are_narrow_maps(spark):
     """Feature extraction / resize / frame sampling must be shuffle-free
     narrow maps (mapInPandas) — memory bounded by Arrow batch size."""

@@ -86,14 +86,6 @@ def main(argv: list[str] | None = None) -> int:
                             "faster AND tighter on long source text) or "
                             "fsst+residual; FSST keeps short columns "
                             "either way")
-        p.add_argument("--shuffle-payload", choices=["raw", "packed"],
-                       default="packed",
-                       help="general-path exchange payload: zstd-1-"
-                            "compressed Arrow-IPC sub-batch blobs "
-                            "(default; ~9x fewer bytes through the row-"
-                            "serialize/exchange/reduce-IPC path on "
-                            "source text, block bytes identical) or raw "
-                            "rows")
         p.add_argument("--read-mode", choices=["mmap", "pre_buffer", "plain"],
                        default="mmap",
                        help="clustered-path rowgroup read strategy: mmap "
@@ -179,7 +171,6 @@ def main(argv: list[str] | None = None) -> int:
                           codec_overrides=_parse_overrides(args.codec),
                           residual=args.residual,
                           long_strings=args.long_strings,
-                          shuffle_payload=args.shuffle_payload,
                           resume=not args.no_resume,
                           parquet_version=args.parquet_version)
             if getattr(args, "clustered", False):

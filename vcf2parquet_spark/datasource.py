@@ -194,14 +194,16 @@ def _schema_manifest(options: dict) -> dict:
     if part_id is not None:
         with open(tbl.manifest_path(path, part_id)) as f:
             return json.load(f)
-    # no snapshot yet (or an empty live set): any committed manifest —
-    # a crashed/in-flight run's table is still schema-readable
+    # no snapshot yet (or an empty live set): the newest committed
+    # manifest — a crashed/in-flight run's table is still schema-
+    # readable, and after an empty overwrite the last written schema
+    # wins (ids sort numerically; names outgrow 5 digits)
     mdir = os.path.join(path, tbl.MANIFEST_DIR)
-    names = sorted(
-        n for n in (os.listdir(mdir) if os.path.isdir(mdir) else [])
-        if n.startswith("part-") and n.endswith(".json"))
+    names = [n for n in (os.listdir(mdir) if os.path.isdir(mdir) else [])
+             if n.startswith("part-") and n.endswith(".json")]
     if names:
-        with open(os.path.join(mdir, names[0])) as f:
+        newest = max(names, key=lambda n: int(n[5:-5]))
+        with open(os.path.join(mdir, newest)) as f:
             return json.load(f)
     raise StorageError(f"no committed partitions under {path}")
 

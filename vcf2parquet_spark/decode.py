@@ -8,9 +8,8 @@ Mirrors ``encode.py`` in reverse (SURVEY.md §3.4 ``decode.py`` stage):
 * execute: a narrow ``mapInArrow`` over the round-robin-distributed
   file list; each task opens its files directly with pyarrow (column-
   pruned read) and decodes block by block — ZERO shuffle of the encoded
-  bytes (the previous scan→repartition→applyInArrow shape moved the
-  whole table through the shuffle fabric once; at 100 TB that shuffle
-  IS the job);
+  bytes (a shuffle would move the whole table through the fabric once;
+  at 100 TB that shuffle IS the job);
 * row-level predicates are applied on the decoded output (whole-stage
   codegen) after partition-level manifest pruning.
 

@@ -12,6 +12,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+_HEAP_CAP = 24 << 30          # the driver heap never needs more than this
+_WORKER_RESERVE = 512 << 20   # left free per core for its Python worker
+_HEAP_FLOOR = 512 << 20
+
+
+def mem_total_bytes() -> int:
+    """Physical RAM (``MemTotal``); 0 when /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return 0
+
+
+def default_driver_mem(mem_total: int, cores: int) -> str:
+    """Driver heap for local mode, as a JVM size string: a third of
+    the RAM left after one Python worker per core, capped at 24 GiB.
+    The heap is pinned with ``-Xms``, so it must be committable up front;
+    an unknown RAM size (``mem_total`` 0) gets the floor."""
+    heap = min(_HEAP_CAP, (mem_total - cores * _WORKER_RESERVE) // 3)
+    return f"{max(heap, _HEAP_FLOOR) >> 20}m"
+
 
 def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
               shuffle_partitions: int | None = None,
@@ -26,7 +51,8 @@ def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
     # hosts).  Must be set before any worker imports pyarrow; workers
     # inherit the driver env in local mode.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    mem = (os.environ.get("SPARK_DRIVER_MEM")
+           or default_driver_mem(mem_total_bytes(), cores))
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
